@@ -202,12 +202,19 @@ object DwrfDv {
     }
     val r = new DwrfFileReader(file, conf)
     val (fresh, numRows) = try {
-      val matches = DwrfDelete.matcherFor(r.schema, qualifiedRoot, file,
+      // decode only the top-level columns the condition references (the
+      // file yields one row per physical row whatever the projection, so
+      // positions stay exact); a referenced column the file lacks is
+      // absent here too and evaluates as NULL
+      val referenced = filters.flatMap(_.references).toSet
+      val readSchema = StructType(r.schema.fields.filter(f =>
+        referenced.contains(f.name)))
+      val matches = DwrfDelete.matcherFor(readSchema, qualifiedRoot, file,
         tableSchema, filters)
       val acc = new graft.format.LongBuffer()
       var pos = 0L
       var oldIdx = 0
-      r.rows(r.footer.stripes, r.schema).foreach { row =>
+      r.rows(r.footer.stripes, readSchema).foreach { row =>
         val alreadyGone = oldIdx < old.length && old(oldIdx) == pos
         if (alreadyGone) oldIdx += 1
         else if (matches(row)) acc.add(pos)

@@ -397,8 +397,7 @@ object DwrfReplaceCommit {
     // temps from aborted/crashed jobs (no manifest ever written)
     def sweep(p: Path): Unit = fs.listStatus(p).foreach { s =>
       val n = s.getPath.getName
-      if (s.isDirectory && n.indexOf('=') > 0 && !n.startsWith(".") &&
-          !n.startsWith("_")) sweep(s.getPath)
+      if (DwrfUtil.isPartitionDir(s)) sweep(s.getPath)
       else if (s.isFile && n.startsWith(".rlo-") && n.endsWith(".tmp")) {
         fs.delete(s.getPath, false)
         fixed += 1

@@ -395,7 +395,10 @@ object DwrfCompact {
   /** Converges any interrupted compaction OR delete rewrite (both use
     * the same temp-with-manifest swap protocol; see object scaladoc and
     * [[DwrfDelete]]): torn temp → removed, inputs intact; complete
-    * temp → inputs removed, temp promoted.
+    * temp → inputs removed, temp promoted. Temps are written beside
+    * their inputs, so only the root and partition dirs are walked — never
+    * the snapshot log or delete-vector dirs, whose size grows with
+    * history while every DELETE starts here.
     */
   def recover(root: Path, conf: Configuration): Int = {
     val fs = root.getFileSystem(conf)
@@ -405,9 +408,9 @@ object DwrfCompact {
     var fixed = DwrfReplaceCommit.recover(root, conf)
     def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
       val n = s.getPath.getName
-      if (s.isDirectory) walk(s.getPath)
-      else if ((n.startsWith(".compact-") || n.startsWith(".delete-")) &&
-          n.endsWith(".dwrf.inprogress")) {
+      if (DwrfUtil.isPartitionDir(s)) walk(s.getPath)
+      else if (s.isFile && (n.startsWith(".compact-") ||
+          n.startsWith(".delete-")) && n.endsWith(".dwrf.inprogress")) {
         val key =
           if (n.startsWith(".compact-")) ManifestKey
           else DwrfDelete.ManifestKey

@@ -1,5 +1,7 @@
 package graft.sources.dwrf
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -149,4 +151,42 @@ class DwrfCompactSpec extends AnyFunSuite {
     assert(spark.read.format("dwrf").load(dir2).as[Long].collect().toSet
       == (0L until 100L).toSet)
   }
+
+  test("recovery reaches partition dirs and never lists the snapshot log") {
+    val s = spark
+    import s.implicits._
+    val dir = mkdir("compactrec3-")
+    spark.range(0, 100, 1, 2).select(col("id"), (col("id") % 2).as("k"))
+      .write.format("dwrf").mode("overwrite").partitionBy("k").save(dir)
+    DwrfLog.enable(new Path(dir), conf)
+    val fs = new Path(dir).getFileSystem(conf)
+    val torn = new Path(dir, "k=1/.compact-torn.dwrf.inprogress")
+    val os = fs.create(torn, true)
+    os.write("DWRFnot-a-complete-file".getBytes("UTF-8")); os.close()
+    assert(fs.exists(new Path(dir, DwrfLog.LogDirName)))
+
+    val recording = new Configuration(conf)
+    recording.set("fs.file.impl", classOf[ListingRecorderFs].getName)
+    recording.setBoolean("fs.file.impl.disable.cache", true)
+    ListingRecorderFs.listed.clear()
+    assert(DwrfCompact.recover(new Path(dir), recording) == 0)
+    assert(!fs.exists(torn), "torn temp in a partition dir must be dropped")
+    val listed = ListingRecorderFs.listed.asScala.map(_.getName).toSet
+    assert(listed.contains("k=1"))
+    assert(!listed.exists(_.startsWith("_")), s"listed $listed")
+    assert(spark.read.format("dwrf").load(dir).select("id").as[Long]
+      .collect().toSet == (0L until 100L).toSet)
+  }
+}
+
+/** Local filesystem that records every directory it lists. */
+class ListingRecorderFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListingRecorderFs.listed.add(f)
+    super.listStatus(f)
+  }
+}
+
+object ListingRecorderFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 }

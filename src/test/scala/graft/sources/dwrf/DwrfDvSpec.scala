@@ -230,6 +230,48 @@ class DwrfDvSpec extends AnyFunSuite {
     assert(snap.files.isEmpty && snap.dvs.isEmpty)
   }
 
+  test("MoR point delete beside nested and array columns reads only the key") {
+    val dir = tmpDir()
+    val s = spark
+    import s.implicits._
+    // the key is the LAST file column: the projected row's ordinals must
+    // not be the file's
+    (0 until 100).map(i => (Seq(i, i + 1), (i.toLong * 10, s"s-$i"), i.toLong))
+      .toDF("tags", "st", "id")
+      .repartition(2)
+      .write.format("dwrf").mode("overwrite").save(dir)
+    DwrfLog.enable(new Path(dir), conf)
+    val res = DwrfDv.deleteWhere(spark, dir, schemaOf(dir),
+      Array(EqualTo("id", 7L)))
+    assert(res.rowsDeleted === 1L && res.dvsWritten === 1)
+    assert(ids(dir) === (0L until 100L).filterNot(_ == 7L))
+    val rows = spark.read.format("dwrf").load(dir)
+      .select("id", "tags", "st._1", "st._2").collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1), r.getLong(2), r.getString(3)))
+      .sortBy(_._1).toSeq
+    assert(rows === (0 until 100).filterNot(_ == 7).map(i =>
+      (i.toLong, Seq(i, i + 1), i.toLong * 10, s"s-$i")))
+  }
+
+  test("MoR delete on a column an older file lacks: NULL keeps its rows") {
+    val dir = tmpDir()
+    val s = spark
+    import s.implicits._
+    (0 until 50).map(i => (i.toLong, s"old-$i")).toDF("id", "tag")
+      .coalesce(1).write.format("dwrf").mode("overwrite").save(dir)
+    (50 until 100).map(i => (i.toLong, s"new-$i", i + 0.5))
+      .toDF("id", "tag", "score")
+      .coalesce(1).write.format("dwrf").mode("append").save(dir)
+    DwrfLog.enable(new Path(dir), conf)
+    // both files must be decoded: the old one for id = 3 (score reads
+    // NULL there, so only that row goes), the new one for the score
+    val res = DwrfDv.deleteWhere(spark, dir, schemaOf(dir),
+      Array(org.apache.spark.sql.sources.Or(
+        EqualTo("id", 3L), EqualTo("score", 60.5))))
+    assert(res.rowsDeleted === 2L && res.dvsWritten === 2)
+    assert(ids(dir) === (0L until 100L).filterNot(Set(3L, 60L)))
+  }
+
   test("MoR refuses tables without a snapshot log") {
     val dir = tmpDir()
     writeRange(dir, 0, 10)
