@@ -512,7 +512,7 @@ object BenchOpScale {
       }
       val (tSidecarWarm, fSidecar) = minOf3(() => planScan())
       // remove the sidecar: planning falls back to one footer per file
-      val v = DwrfLog.latestVersion(mpRoot, conf).get
+      val v = DwrfLog.latest(mpRoot, conf).get.statsVersion
       fs.delete(new Path(DwrfLog.logDir(mpRoot),
         DwrfLogStats.sidecarName(v)), false)
       val (tFallback, fFallback) = minOf3(() => planScan())

@@ -1270,24 +1270,14 @@ final class DwrfScan(tableSchema: StructType, readSchema: StructType, path: Stri
       else resolvedSnapshot match {
         case None => files
         case Some(snap) =>
-          DwrfLogStats.load(new Path(path), hadoopConf.value, snap.version) match {
+          DwrfLogStats.load(new Path(path), hadoopConf.value, snap.statsVersion) match {
             case None => files
             case Some(sums) =>
               val kept = files.filter { f =>
                 val rel = DwrfLog.relativize(new Path(path), hadoopConf.value, f)
-                sums.get(rel) match {
-                  case None => true // unknown file: never prune blind
-                  case Some(colStats) =>
-                    // partition-path values prune here too (min=max stats),
-                    // numRows=1 because only the window matters
-                    val partStats = PartitionLayout.specOf(qualifiedRoot, f)
-                      .flatMap { case (k, raw) =>
-                        tableSchema.fields.find(_.name == k).flatMap(fd =>
-                          PartitionLayout.asStats(raw, fd.dataType, 1L).map(k -> _))
-                      }.toMap
-                    StatsFilter.mayMatch(pushed.toSeq, tableSchema,
-                      n => colStats.get(n).orElse(partStats.get(n)))
-                }
+                // unknown file: never prune blind
+                sums.get(rel).forall(DwrfLogStats.mayMatch(_, qualifiedRoot, f,
+                  tableSchema, pushed.toSeq))
               }
               DwrfPlanningProbe.manifestPruned.addAndGet(files.size - kept.size)
               kept

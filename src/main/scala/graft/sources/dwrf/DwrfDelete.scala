@@ -302,11 +302,25 @@ object DwrfDelete {
     * file whole, no decode), 2 = maybe (row-level work). Decided from
     * footer stats plus the partition pseudo-stats the scan pruner uses.
     * Returns (file, tier, physicalNumRows).
+    *
+    * A snapshot table passes its version's stats sidecar (`sums`, keyed
+    * by relative path): files it refutes are tier 0 without opening a
+    * footer (numRows 0, never read), exactly as the scan's manifest
+    * pruning skips them. Only the survivors open their footers, which
+    * still decide tier 1 vs 2 and supply numRows. A file the sidecar does
+    * not summarize — or no sidecar at all (missing, unreadable, a table
+    * without a log) — goes through the footer pass.
     */
   private[dwrf] def classifyFiles(files: Seq[Path],
       conf: org.apache.hadoop.conf.Configuration, tableSchema: StructType,
-      qualifiedRoot: Path, filters: Array[Filter]): Seq[(Path, Int, Long)] =
-    DwrfUtil.parMap(files) { file =>
+      qualifiedRoot: Path, filters: Array[Filter],
+      sums: Option[DwrfLogStats.Summaries]): Seq[(Path, Int, Long)] = {
+    val (refuted, open) = files.partition { file =>
+      sums.flatMap(_.get(DwrfLog.relativize(qualifiedRoot, conf, file)))
+        .exists(!DwrfLogStats.mayMatch(_, qualifiedRoot, file, tableSchema,
+          filters.toSeq))
+    }
+    refuted.map(f => (f, 0, 0L)) ++ DwrfUtil.parMap(open) { file =>
       val r = new DwrfFileReader(file, conf)
       try {
         val statsByName = ColumnTree.pathIds(r.schema).flatMap {
@@ -326,6 +340,7 @@ object DwrfDelete {
         (file, tier, r.footer.numRows)
       } finally r.close()
     }
+  }
 
   /** Applies the delete under `root`. `tableSchema` is the full table
     * schema (partition columns included), `partTypes` their declared
@@ -353,17 +368,17 @@ object DwrfDelete {
     // files stay on disk for time travel and leave through one atomic
     // commitReplace below, so concurrent readers never see a half-swap
     val snapshots = DwrfLog.isEnabled(rootPath, conf)
+    val snap = if (snapshots) DwrfLog.latest(rootPath, conf) else None
     // the snapshot's delete-vector bindings: rewrites must MASK already-
     // deleted positions (or they would resurrect merge-on-read deletes),
     // and the replace commit must prove the bindings didn't change
-    val snapDvs: Map[String, String] =
-      if (snapshots) DwrfLog.latest(rootPath, conf).map(_.dvs).getOrElse(Map.empty)
-      else Map.empty
-    val files = DwrfUtil.scanFiles(rootPath, conf, Map.empty)
+    val snapDvs: Map[String, String] = snap.map(_.dvs).getOrElse(Map.empty)
+    val files = snap.map(_.resolved(qualifiedRoot))
+      .getOrElse(DwrfUtil.listDataFiles(rootPath, conf))
     val fs = rootPath.getFileSystem(conf)
 
     val classified = classifyFiles(files, conf, tableSchema, qualifiedRoot,
-      filters)
+      filters, snap.flatMap(s => DwrfLogStats.load(rootPath, conf, s.statsVersion)))
 
     val kept = classified.count(_._2 == 0)
     var rowsDeleted = 0L

@@ -26,6 +26,17 @@ import graft.format.DeleteVector
   * (provably-untouched files never open; provably-all-matching files
   * leave the live set whole, no sidecar, no decode) and the exact
   * three-valued row evaluator ([[DwrfDelete.matcherFor]] — NULL keeps).
+  * Classification starts from the version's stats sidecar
+  * ([[DwrfLogStats]]): files its summaries refute are untouched without
+  * a footer read, so a point DELETE opens only the footers of the files
+  * that may hold the key; those footers still tell a whole-file drop
+  * from a row-level pass. A missing or unreadable sidecar falls back to
+  * reading every footer.
+  *
+  * What a DELETE commits: only delete-vector rebindings (and whole-file
+  * drops). When no file leaves the live set the file set is unchanged,
+  * so the commit writes no stats sidecar — its manifest names the
+  * parent's ([[DwrfLog.Snapshot.statsVersion]]).
   *
   * The read-time cost — and the way back out of it: a DV'd file scans
   * on the masked row path (no vectorized batches, no stride skipping),
@@ -129,7 +140,8 @@ object DwrfDv {
       DwrfLog.relativize(rootPath, conf, f)).toMap
 
     val classified = DwrfDelete.classifyFiles(files, conf, tableSchema,
-      qualifiedRoot, filters)
+      qualifiedRoot, filters,
+      DwrfLogStats.load(rootPath, conf, snap.statsVersion))
     val untouched = classified.count(_._2 == 0)
 
     var rowsDeleted = 0L

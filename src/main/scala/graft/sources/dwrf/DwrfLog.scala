@@ -43,6 +43,30 @@ import org.apache.hadoop.fs.{FileStatus, Path}
   *
   * The log is OPT-IN per table ([[enable]]): streaming landing dirs and
   * plain directories keep their existing listing semantics untouched.
+  *
+  * Finding the latest version lists nothing in the common case. Commits
+  * publish contiguous versions through an exclusive link or rename, and
+  * vacuum only ever drops the oldest ones, so a version that exists and
+  * has no successor is the latest — whichever JVM committed it. The JVM
+  * keeps the last version it saw per log directory, checks that
+  * `v<seen>` still exists, and probes `v<seen+1>`, `v<seen+2>`, … up to
+  * the first one missing: two `exists` calls when nothing changed, one
+  * more per version committed since. Only with no hint, or a hint whose
+  * manifest is gone (the table was dropped and recreated), does it list
+  * `_graft_log` — a listing whose cost grows with history.
+  *
+  * Manifest wire format (one JSON object, the exact shape [[render]]
+  * writes; paths relative to the table root):
+  * {{{
+  * {"version":<v>,"ts":<millis>,"op":"<op>",["stats":<s>,]
+  *  ["dvs":[["<file>","<dv>"],...],]"files":["<file>",...]}
+  * }}}
+  * `stats` names the version whose stats sidecar ([[DwrfLogStats]])
+  * describes this version's files. It is written only when that is not
+  * the version itself: a commit that leaves the file set unchanged (a
+  * merge-on-read DELETE only rebinds delete vectors) shares its parent's
+  * sidecar instead of writing an identical one. Manifests without the
+  * field read as naming their own sidecar.
   */
 object DwrfLog {
   val LogDirName = "_graft_log"
@@ -77,12 +101,18 @@ object DwrfLog {
     * version. At most one DV per file per version: a second DELETE
     * writes the UNION as a fresh sidecar and rebinds. Files without an
     * entry have no deleted rows.
+    *
+    * `stats` is the version whose stats sidecar this version shares
+    * (None = its own; see the wire format above).
     */
   final case class Snapshot(version: Long, op: String, files: Seq[String],
-      ts: Long = 0L, dvs: Map[String, String] = Map.empty) {
+      ts: Long = 0L, dvs: Map[String, String] = Map.empty,
+      stats: Option[Long] = None) {
     def resolved(root: Path): Seq[Path] = files.map(new Path(root, _))
     def dvFor(root: Path, relFile: String): Option[Path] =
       dvs.get(relFile).map(new Path(root, _))
+    /** The version whose sidecar holds this version's file stats. */
+    def statsVersion: Long = stats.getOrElse(version)
   }
 
   final case class VacuumResult(dataFilesDeleted: Int, manifestsDeleted: Int,
@@ -131,8 +161,9 @@ object DwrfLog {
       else s.dvs.toSeq.sortBy(_._1).map { case (f, d) =>
         "[\"" + esc(f) + "\",\"" + esc(d) + "\"]"
       }.mkString("\"dvs\":[", ",", "],")
+    val statsPart = s.stats.fold("")(v => s""""stats":$v,""")
     s"""{"version":${s.version},"ts":${s.ts},"op":"${esc(s.op)}",""" +
-      dvPart + "\"files\":[" +
+      statsPart + dvPart + "\"files\":[" +
       s.files.map(f => "\"" + esc(f) + "\"").mkString(",") + "]}"
   }
 
@@ -162,7 +193,12 @@ object DwrfLog {
         strs.grouped(2).map(p => p(0) -> p(1)).toMap
       }
     }
-    Snapshot(vM.group(1).toLong, unesc(oM.group(1)), files, ts, dvs)
+    // stats is optional too (absent = the version's own sidecar); looked
+    // for only before the arrays, where no path string can imitate it
+    val headEnd = Seq(body.indexOf("\"dvs\":["), fStart).filter(_ >= 0).min
+    val stats = """"stats":(\d+)""".r.findFirstMatchIn(body.substring(0, headEnd))
+      .map(_.group(1).toLong)
+    Snapshot(vM.group(1).toLong, unesc(oM.group(1)), files, ts, dvs, stats)
   }
 
   private def unesc(s: String): String = {
@@ -193,8 +229,33 @@ object DwrfLog {
       versionOf(s.getPath.getName).map(_ -> s.getPath)).sortBy(_._1)
   }
 
-  def latestVersion(root: Path, conf: Configuration): Option[Long] =
-    listVersions(root, conf).lastOption.map(_._1)
+  /** Last version seen per qualified log dir in this JVM: the probe
+    * start of [[latestVersion]]. A stale or lowered entry only costs
+    * probes (or one listing), never a wrong answer. */
+  private val latestSeen =
+    scala.collection.concurrent.TrieMap.empty[String, Long]
+
+  /** The newest committed version, found by probing forward from the
+    * last version seen here; lists the log dir only without a usable
+    * hint (see the object scaladoc). */
+  def latestVersion(root: Path, conf: Configuration): Option[Long] = {
+    val ld = logDir(root)
+    val fs = ld.getFileSystem(conf)
+    val key = fs.makeQualified(ld).toString
+    def exists(v: Long) = fs.exists(new Path(ld, manifestName(v)))
+    val found = latestSeen.get(key).filter(exists) match {
+      case Some(seen) =>
+        var v = seen
+        while (exists(v + 1)) v += 1
+        Some(v)
+      case None => listVersions(root, conf).lastOption.map(_._1)
+    }
+    found match {
+      case Some(v) => latestSeen.put(key, v)
+      case None => latestSeen.remove(key)
+    }
+    found
+  }
 
   def read(root: Path, conf: Configuration, version: Long): Snapshot = {
     val p = new Path(logDir(root), manifestName(version))
@@ -348,9 +409,8 @@ object DwrfLog {
     }
   }
 
-  /** Publish `snap` as the next version after `parent`. Returns the
-    * committed snapshot, or None when another writer took the version
-    * slot first (caller re-reads and retries/aborts).
+  /** Publish `snap`'s manifest in its version slot. False when another
+    * writer took the slot first (caller re-reads and retries/aborts).
     */
   private def tryPublish(root: Path, conf: Configuration,
       snap: Snapshot): Boolean = {
@@ -360,12 +420,16 @@ object DwrfLog {
     val target = new Path(ld, manifestName(snap.version))
     if (fs.exists(target)) return false
     val tmp = new Path(ld, s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = fs.create(tmp, false)
-    try out.write(render(snap).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val body = render(snap).getBytes(java.nio.charset.StandardCharsets.UTF_8)
     fs match {
       case _: org.apache.hadoop.fs.LocalFileSystem
            | _: org.apache.hadoop.fs.RawLocalFileSystem =>
+        // the temp is written with java.nio: without libhadoop, Hadoop's
+        // local create spawns `chmod` for the file and again for its
+        // .crc (~10 ms per commit), and the .crc never outlived the temp
+        // anyway — the published link has none
+        java.nio.file.Files.write(java.nio.file.Paths.get(tmp.toUri.getPath), body,
+          java.nio.file.StandardOpenOption.CREATE_NEW)
         // POSIX local FS: rename(2) REPLACES an existing destination, so
         // two same-slot committers could BOTH "win" and one manifest
         // would be silently overwritten (the lost-update race the
@@ -403,6 +467,8 @@ object DwrfLog {
         // HDFS-semantics stores: rename refuses an existing destination,
         // so the plain rename IS the exclusive atomic commit point; a
         // lost race returns false and the temp is withdrawn
+        val out = fs.create(tmp, false)
+        try out.write(body) finally out.close()
         if (fs.exists(target) || !fs.rename(tmp, target)) {
           fs.delete(tmp, false)
           false
@@ -416,6 +482,49 @@ object DwrfLog {
   private def stampOver(parent: Option[Snapshot]): Long =
     math.max(System.currentTimeMillis(),
       parent.map(_.ts + 1).getOrElse(Long.MinValue))
+
+  /** Publish `snap` over `parent` and, once it owns the version slot, its
+    * stats sidecar — the one place that decides whether a commit writes
+    * one. A commit whose file set equals its parent's shares the parent's
+    * sidecar (the manifest names it in `stats`) and writes none; `sums`
+    * is evaluated only when a sidecar is written. None when another
+    * writer took the slot first.
+    */
+  private def publish(root: Path, conf: Configuration, parent: Option[Snapshot],
+      snap: Snapshot)(sums: => DwrfLogStats.Summaries): Option[Snapshot] = {
+    val shared = parent.filter(_.files == snap.files).map(_.statsVersion)
+    val s = snap.copy(stats = shared)
+    if (!tryPublish(root, conf, s)) None
+    else {
+      if (shared.isEmpty) DwrfLogStats.write(root, conf, s.version, sums)
+      Some(s)
+    }
+  }
+
+  /** The optimistic commit loop every writer shares: read the latest
+    * version, let `next` derive the commit over it (None = nothing to
+    * commit, the parent is returned as-is; a conflict throws), publish,
+    * and retry against the new parent when another writer won the slot.
+    * `sums(parent, next)` summarizes the new file set for its sidecar.
+    */
+  private def commitOver(root: Path, conf: Configuration, kind: String)(
+      next: Snapshot => Option[Snapshot])(
+      sums: (Snapshot, Snapshot) => DwrfLogStats.Summaries): Snapshot = {
+    var attempt = 0
+    while (attempt < 64) {
+      val parent = requireEnabled(root, conf)
+      next(parent) match {
+        case None => return parent
+        case Some(snap) =>
+          publish(root, conf, Some(parent), snap)(sums(parent, snap)) match {
+            case Some(s) => return s
+            case None => attempt += 1
+          }
+      }
+    }
+    throw new IllegalStateException(
+      s"dwrf: $kind commit under $root lost 64 version races")
+  }
 
   /** Initialize the log at version 0 from the directory's current data
     * files. Idempotent: an existing log is returned as-is. Refuses
@@ -435,12 +544,10 @@ object DwrfLog {
         DwrfCompact.recover(root, conf) // converge older swap protocols first
         val files = DwrfUtil.listDataFiles(root, conf)
           .map(relativize(root, conf, _)).sorted
-        val snap = Snapshot(0L, "init", files, stampOver(None))
-        require(tryPublish(root, conf, snap),
-          s"dwrf: concurrent log initialization under $root")
-        DwrfLogStats.write(root, conf, 0L,
-          DwrfLogStats.summarize(root, conf, files))
-        snap
+        publish(root, conf, None, Snapshot(0L, "init", files, stampOver(None)))(
+          DwrfLogStats.summarize(root, conf, files)).getOrElse(
+          throw new IllegalArgumentException(
+            s"dwrf: concurrent log initialization under $root"))
     }
   }
 
@@ -456,42 +563,26 @@ object DwrfLog {
   def commitAppend(root: Path, conf: Configuration, added: Seq[Path],
       op: String = "append"): Snapshot = lockFor(root).synchronized {
     val rel = added.map(relativize(root, conf, _))
-    var attempt = 0
-    while (attempt < 64) {
-      val parent = requireEnabled(root, conf)
-      if (rel.forall(parent.files.contains))
-        return parent // pure replay: everything already referenced
-      val merged = (parent.files ++ rel.filterNot(parent.files.contains)).sorted
-      val snap = Snapshot(parent.version + 1, op, merged,
-        stampOver(Some(parent)), parent.dvs)
-      if (tryPublish(root, conf, snap)) {
-        DwrfLogStats.write(root, conf, snap.version,
-          DwrfLogStats.advance(root, conf, parent, merged, rel))
-        return snap
-      }
-      attempt += 1
+    commitOver(root, conf, "append") { parent =>
+      // pure replay (everything already referenced) commits nothing
+      if (rel.forall(parent.files.contains)) None
+      else Some(Snapshot(parent.version + 1, op,
+        (parent.files ++ rel.filterNot(parent.files.contains)).sorted,
+        stampOver(Some(parent)), parent.dvs))
+    } { (parent, next) =>
+      DwrfLogStats.advance(root, conf, parent, next.files, rel)
     }
-    throw new IllegalStateException(
-      s"dwrf: append commit under $root lost ${64} version races")
   }
 
   /** Commit a full replacement file set (INSERT OVERWRITE / truncate). */
   def commitTruncate(root: Path, conf: Configuration, files: Seq[Path],
       op: String = "overwrite"): Snapshot = lockFor(root).synchronized {
     val rel = files.map(relativize(root, conf, _)).sorted
-    var attempt = 0
-    while (attempt < 64) {
-      val parent = requireEnabled(root, conf)
-      val snap = Snapshot(parent.version + 1, op, rel, stampOver(Some(parent)))
-      if (tryPublish(root, conf, snap)) {
-        DwrfLogStats.write(root, conf, snap.version,
-          DwrfLogStats.advance(root, conf, parent, rel, rel))
-        return snap
-      }
-      attempt += 1
+    commitOver(root, conf, "overwrite") { parent =>
+      Some(Snapshot(parent.version + 1, op, rel, stampOver(Some(parent))))
+    } { (parent, next) =>
+      DwrfLogStats.advance(root, conf, parent, next.files, rel)
     }
-    throw new IllegalStateException(
-      s"dwrf: overwrite commit under $root lost ${64} version races")
   }
 
   /** Commit a copy-on-write swap: `removed` leave the live set (files
@@ -518,9 +609,7 @@ object DwrfLog {
     lockFor(root).synchronized {
       val relRemoved = removed.map(relativize(root, conf, _))
       val relAdded = added.map(relativize(root, conf, _))
-      var attempt = 0
-      while (attempt < 64) {
-        val parent = requireEnabled(root, conf)
+      commitOver(root, conf, "replace") { parent =>
         val live = parent.files.toSet
         val gone = (relRemoved ++ dvUpdates.keys).filterNot(live.contains)
         if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
@@ -534,19 +623,13 @@ object DwrfLog {
             s"vector binding for ${rebound.take(3).mkString(", ")} (a " +
             s"concurrent DELETE committed v${parent.version}); committing " +
             "would resurrect its deleted rows. Re-run the statement.")
-        val snap = Snapshot(parent.version + 1, op,
+        Some(Snapshot(parent.version + 1, op,
           (parent.files.filterNot(relRemoved.contains) ++ relAdded).sorted,
           stampOver(Some(parent)),
-          parent.dvs -- relRemoved ++ dvUpdates)
-        if (tryPublish(root, conf, snap)) {
-          DwrfLogStats.write(root, conf, snap.version,
-            DwrfLogStats.advance(root, conf, parent, snap.files, relAdded))
-          return snap
-        }
-        attempt += 1
+          parent.dvs -- relRemoved ++ dvUpdates))
+      } { (parent, next) =>
+        DwrfLogStats.advance(root, conf, parent, next.files, relAdded)
       }
-      throw new IllegalStateException(
-        s"dwrf: replace commit under $root lost ${64} version races")
     }
 
   /** Commit an INSERT OVERWRITE of a partition scope. Unlike
@@ -568,23 +651,14 @@ object DwrfLog {
       scope: String => Boolean, added: Seq[Path], op: String): Snapshot =
     lockFor(root).synchronized {
       val relAdded = added.map(relativize(root, conf, _))
-      var attempt = 0
-      while (attempt < 64) {
-        val parent = requireEnabled(root, conf)
-        val relRemoved = parent.files.filter(scope)
-        val snap = Snapshot(parent.version + 1, op,
+      commitOver(root, conf, "overwrite") { parent =>
+        Some(Snapshot(parent.version + 1, op,
           (parent.files.filterNot(scope) ++ relAdded).sorted,
           stampOver(Some(parent)),
-          parent.dvs -- relRemoved)
-        if (tryPublish(root, conf, snap)) {
-          DwrfLogStats.write(root, conf, snap.version,
-            DwrfLogStats.advance(root, conf, parent, snap.files, relAdded))
-          return snap
-        }
-        attempt += 1
+          parent.dvs -- parent.files.filter(scope)))
+      } { (parent, next) =>
+        DwrfLogStats.advance(root, conf, parent, next.files, relAdded)
       }
-      throw new IllegalStateException(
-        s"dwrf: overwrite commit under $root lost ${64} version races")
     }
 
   /** Roll the table back (or forward) to the state of `toVersion` by
@@ -607,23 +681,15 @@ object DwrfLog {
         s"dwrf: cannot restore $root to v$toVersion: ${missing.size} " +
           s"referenced file(s) were vacuumed (first: ${missing.head}). " +
           "Only versions whose files survive retention are restorable.")
-      var attempt = 0
-      while (attempt < 64) {
-        val parent = requireEnabled(root, conf)
+      commitOver(root, conf, "restore") { parent =>
         if (parent.files == target.files && parent.dvs == target.dvs)
-          return parent // already in the target state
-        val snap = Snapshot(parent.version + 1, s"restore(v$toVersion)",
-          target.files, stampOver(Some(parent)), target.dvs)
-        if (tryPublish(root, conf, snap)) {
-          DwrfLogStats.write(root, conf, snap.version,
-            DwrfLogStats.load(root, conf, toVersion).getOrElse(
-              DwrfLogStats.summarize(root, conf, target.files)))
-          return snap
-        }
-        attempt += 1
+          None // already in the target state
+        else Some(Snapshot(parent.version + 1, s"restore(v$toVersion)",
+          target.files, stampOver(Some(parent)), target.dvs))
+      } { (_, _) =>
+        DwrfLogStats.load(root, conf, target.statsVersion).getOrElse(
+          DwrfLogStats.summarize(root, conf, target.files))
       }
-      throw new IllegalStateException(
-        s"dwrf: restore commit under $root lost ${64} version races")
     }
 
   // --------------------------------------------------------------- cli
@@ -715,8 +781,9 @@ object DwrfLog {
         }
       }
       drop.foreach { case (_, p) => fs.delete(p, false) }
-      // stats sidecars of dropped versions (and orphans from lost races)
-      DwrfLogStats.vacuumSidecars(root, conf, keep.map(_._1).toSet)
+      // stats sidecars no retained version names (dropped versions'
+      // own, orphans from lost races); a shared one stays with its sharers
+      DwrfLogStats.vacuumSidecars(root, conf, retained.map(_.statsVersion).toSet)
       // withdraw commit temps from crashed publishers
       fs.listStatus(logDir(root)).foreach { s =>
         if (s.getPath.getName.startsWith(".tmp-")) fs.delete(s.getPath, false)

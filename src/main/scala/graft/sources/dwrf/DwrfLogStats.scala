@@ -2,6 +2,8 @@ package graft.sources.dwrf
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 
 import graft.format.ColumnStats
 
@@ -15,10 +17,20 @@ import graft.format.ColumnStats
   * before the first task launches. Modern table formats solve it by
   * carrying file-level column stats in the commit metadata itself
   * (Iceberg manifests, Delta checkpoint stats); this is that move for
-  * the dwrf log: each commit writes `v<version>.stats` next to its
+  * the dwrf log: a commit writes `v<version>.stats` next to its
   * manifest, mapping every live data file to the same file-level column
   * stats its footer holds. A scan loads ONE sidecar, prunes, and opens
-  * footers only for surviving files.
+  * footers only for surviving files; a DELETE classifies its candidates
+  * from the same sidecar ([[DwrfDelete.classifyFiles]]).
+  *
+  * Which commits write one: every commit that changes the live file set
+  * (init, append, overwrite, copy-on-write DELETE/UPDATE/MERGE,
+  * compaction, restore). A commit that leaves the file set as it was —
+  * a merge-on-read DELETE only rebinds delete vectors — writes none: its
+  * manifest names the parent's sidecar (`stats`, see [[DwrfLog]]) and
+  * [[DwrfLog.Snapshot.statsVersion]] resolves it, so a run of such
+  * DELETEs shares one sidecar. Vacuum keeps every sidecar a retained
+  * manifest names, also when the version that wrote it is dropped.
   *
   * The sidecar is ADVISORY-BUT-EXACT: it must agree with the footers it
   * summarizes (it is built from them at commit time), and a missing or
@@ -166,6 +178,26 @@ object DwrfLogStats {
     }.flatten.toMap
   }
 
+  /** Can the file summarized as `colStats` hold a row matching
+    * `filters`? Its partition-path values join as min=max stats (row
+    * count 1: only the window matters), taking precedence over a
+    * same-named file column as in the footer pass. The scan's manifest
+    * pruning and the DELETE classifier both refute files with this —
+    * the same [[StatsFilter]] evaluation the footer pass runs, on the
+    * same footer-derived stats, so it never refutes a file the footer
+    * pass would keep.
+    */
+  def mayMatch(colStats: Map[String, ColumnStats], qualifiedRoot: Path,
+      file: Path, tableSchema: StructType, filters: Seq[Filter]): Boolean = {
+    val partStats = PartitionLayout.specOf(qualifiedRoot, file)
+      .flatMap { case (k, raw) =>
+        tableSchema.fields.find(_.name == k).flatMap(fd =>
+          PartitionLayout.asStats(raw, fd.dataType, 1L).map(k -> _))
+      }.toMap
+    StatsFilter.mayMatch(filters, tableSchema,
+      n => partStats.get(n).orElse(colStats.get(n)))
+  }
+
   // -------------------------------------------------------------- i/o
 
   /** Publish the sidecar for `version` (temp + rename; best-effort — a
@@ -233,17 +265,18 @@ object DwrfLogStats {
       }
     } catch { case _: Exception => None }
 
-  /** Sidecar upkeep for [[DwrfLog.vacuum]]: drop sidecars whose manifest
-    * is gone (dropped versions and orphans from lost commit races). */
+  /** Sidecar upkeep for [[DwrfLog.vacuum]]: drop every sidecar no
+    * retained manifest names (dropped versions' own, and orphans from
+    * lost commit races); `named` = the retained versions' statsVersions. */
   def vacuumSidecars(root: Path, conf: Configuration,
-      retainedVersions: Set[Long]): Int = {
+      named: Set[Long]): Int = {
     val ld = DwrfLog.logDir(root)
     val fs = ld.getFileSystem(conf)
     if (!fs.exists(ld)) return 0
     var n = 0
     fs.listStatus(ld).foreach { s =>
       versionOfSidecar(s.getPath.getName).foreach { v =>
-        if (!retainedVersions.contains(v)) { fs.delete(s.getPath, false); n += 1 }
+        if (!named.contains(v)) { fs.delete(s.getPath, false); n += 1 }
       }
     }
     n
@@ -253,7 +286,7 @@ object DwrfLogStats {
     * surviving files, plus freshly footer-read summaries for `added`. */
   def advance(root: Path, conf: Configuration, parent: DwrfLog.Snapshot,
       nextFiles: Seq[String], addedRel: Seq[String]): Summaries = {
-    val carried = load(root, conf, parent.version).getOrElse(Map.empty)
+    val carried = load(root, conf, parent.statsVersion).getOrElse(Map.empty)
     val next = nextFiles.toSet
     val fresh = addedRel.filterNot(carried.contains)
     carried.filter { case (rel, _) => next.contains(rel) } ++

@@ -308,7 +308,7 @@ private final class ShiftedInternalRow(offset: Int) extends InternalRow {
 
 /** The directory-level swap: manifest first, then renames, then
   * deletes, then manifest removal — every step idempotent so
-  * [[recover]] can replay a readable manifest from any interruption
+  * [[DwrfCompact.recover]] can replay a readable manifest from any interruption
   * point (rename done = temp gone + target present; delete done = file
   * gone), and a TORN manifest (no terminator) rolls back instead.
   */
@@ -376,34 +376,31 @@ object DwrfReplaceCommit {
     fs.delete(manifest, false)
   }
 
-  /** Converges interrupted swaps under `root`: readable manifests
-    * replay, torn ones roll back (their temps deleted); orphan
-    * `.rlo-*.tmp` temps (aborted jobs) are swept. Returns actions taken.
+  /** Converges the interrupted swaps whose manifests are among `rootEntries`
+    * (the table root's listing — manifests live only there): readable
+    * manifests replay, torn ones roll back (their temps are swept as
+    * orphans afterwards). Returns actions taken. Run by
+    * [[DwrfCompact.recover]], which sweeps [[isOrphanTemp]]s after this.
     */
-  private[dwrf] def recover(root: Path, conf: Configuration): Int = {
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return 0
+  private[dwrf] def replayManifests(rootEntries: Seq[org.apache.hadoop.fs.FileStatus],
+      fs: org.apache.hadoop.fs.FileSystem): Int = {
     var fixed = 0
-    val manifests = fs.listStatus(root).toSeq
+    rootEntries
       .filter(s => s.isFile && s.getPath.getName.startsWith(ManifestPrefix))
-    manifests.foreach { m =>
-      val ok = try { apply(m.getPath, fs); fixed += 1; true }
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) { // torn: roll back — originals untouched, drop the manifest
-        fs.delete(m.getPath, false)
+      .foreach { m =>
+        val ok = try { apply(m.getPath, fs); true }
+          catch { case scala.util.control.NonFatal(_) => false }
+        // torn: roll back — originals untouched, drop the manifest
+        if (!ok) fs.delete(m.getPath, false)
         fixed += 1
       }
-    }
-    // temps from aborted/crashed jobs (no manifest ever written)
-    def sweep(p: Path): Unit = fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (DwrfUtil.isPartitionDir(s)) sweep(s.getPath)
-      else if (s.isFile && n.startsWith(".rlo-") && n.endsWith(".tmp")) {
-        fs.delete(s.getPath, false)
-        fixed += 1
-      }
-    }
-    sweep(root)
     fixed
+  }
+
+  /** A row-level temp of an aborted or crashed job: no manifest was
+    * ever written, or a torn one was rolled back. */
+  private[dwrf] def isOrphanTemp(s: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && n.startsWith(".rlo-") && n.endsWith(".tmp")
   }
 }

@@ -395,21 +395,27 @@ object DwrfCompact {
   /** Converges any interrupted compaction OR delete rewrite (both use
     * the same temp-with-manifest swap protocol; see object scaladoc and
     * [[DwrfDelete]]): torn temp → removed, inputs intact; complete
-    * temp → inputs removed, temp promoted. Temps are written beside
-    * their inputs, so only the root and partition dirs are walked — never
-    * the snapshot log or delete-vector dirs, whose size grows with
-    * history while every DELETE starts here.
+    * temp → inputs removed, temp promoted. The row-level swap protocol
+    * ([[DwrfReplaceCommit]]) converges on the same pass: its
+    * `.rlo-commit-*` manifests replay first, then its orphan temps are
+    * swept. Temps are written beside their inputs, so one walk lists the
+    * root and each partition dir exactly once — never the snapshot log or
+    * delete-vector dirs, whose size grows with history while every DELETE
+    * starts here.
     */
   def recover(root: Path, conf: Configuration): Int = {
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return 0
-    // row-level (UPDATE/MERGE/complex-DELETE) swap manifests + orphan
-    // temps converge on the same maintenance pass
-    var fixed = DwrfReplaceCommit.recover(root, conf)
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
+    val top = fs.listStatus(root).toSeq
+    var fixed = DwrfReplaceCommit.replayManifests(top, fs)
+    // root entries predate the replay; a temp it renamed is gone, so
+    // `delete` finds nothing and counts nothing
+    def visit(entries: Seq[org.apache.hadoop.fs.FileStatus]): Unit = entries.foreach { s =>
       val n = s.getPath.getName
-      if (DwrfUtil.isPartitionDir(s)) walk(s.getPath)
-      else if (s.isFile && (n.startsWith(".compact-") ||
+      if (DwrfUtil.isPartitionDir(s)) visit(fs.listStatus(s.getPath).toSeq)
+      else if (DwrfReplaceCommit.isOrphanTemp(s)) {
+        if (fs.delete(s.getPath, false)) fixed += 1
+      } else if (s.isFile && (n.startsWith(".compact-") ||
           n.startsWith(".delete-")) && n.endsWith(".dwrf.inprogress")) {
         val key =
           if (n.startsWith(".compact-")) ManifestKey
@@ -439,7 +445,7 @@ object DwrfCompact {
         }
       }
     }
-    walk(root)
+    visit(top)
     fixed
   }
 }

@@ -164,16 +164,36 @@ class DwrfCompactSpec extends AnyFunSuite {
     val os = fs.create(torn, true)
     os.write("DWRFnot-a-complete-file".getBytes("UTF-8")); os.close()
     assert(fs.exists(new Path(dir, DwrfLog.LogDirName)))
+    // a row-level swap interrupted after its manifest: the manifest
+    // renames a root-level temp, so the root listing taken before the
+    // replay is stale by the time temps are swept
+    val replayedTemp = new Path(dir, ".rlo-replayed.tmp")
+    val promoted = new Path(dir, "rlo-replayed.dwrf")
+    fs.create(replayedTemp, true).close()
+    val manifest = fs.create(new Path(dir, DwrfReplaceCommit.ManifestPrefix + "t"), true)
+    manifest.write(s"R\t$replayedTemp\t$promoted\n#end".getBytes("UTF-8"))
+    manifest.close()
+    // an aborted row-level job's temp in a partition dir
+    val orphan = new Path(dir, "k=0/.rlo-aborted-p00000-t0.tmp")
+    fs.create(orphan, true).close()
 
     val recording = new Configuration(conf)
     recording.set("fs.file.impl", classOf[ListingRecorderFs].getName)
     recording.setBoolean("fs.file.impl.disable.cache", true)
     ListingRecorderFs.listed.clear()
-    assert(DwrfCompact.recover(new Path(dir), recording) == 0)
+    // one manifest replayed + one orphan swept; the torn compaction temp
+    // is dropped without counting
+    assert(DwrfCompact.recover(new Path(dir), recording) == 2)
     assert(!fs.exists(torn), "torn temp in a partition dir must be dropped")
-    val listed = ListingRecorderFs.listed.asScala.map(_.getName).toSet
-    assert(listed.contains("k=1"))
-    assert(!listed.exists(_.startsWith("_")), s"listed $listed")
+    assert(!fs.exists(orphan), "orphan row-level temp must be swept")
+    assert(fs.exists(promoted) && !fs.exists(replayedTemp))
+    assert(!fs.listStatus(new Path(dir)).exists(
+      _.getPath.getName.startsWith(DwrfReplaceCommit.ManifestPrefix)))
+    val listed = ListingRecorderFs.listed.asScala.toSeq
+      .map(p => Path.getPathWithoutSchemeAndAuthority(p).toString)
+      .filter(_.startsWith(dir)).sorted
+    assert(listed == Seq(dir, s"$dir/k=0", s"$dir/k=1"),
+      s"each directory must be listed exactly once, listed $listed")
     assert(spark.read.format("dwrf").load(dir).select("id").as[Long]
       .collect().toSet == (0L until 100L).toSet)
   }

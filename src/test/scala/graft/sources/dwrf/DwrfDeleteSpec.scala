@@ -227,4 +227,160 @@ class DwrfDeleteSpec extends AnyFunSuite {
     assert(!fs.exists(torn))
     assert(s.read.format("dwrf").load(dir).as[Long].collect().toSeq == Seq(2L))
   }
+
+  // ------------------------------------ classification from the sidecar
+
+  test("seeded DELETEs leave exactly what a DataFrame filter predicts, any sidecar state") {
+    // snapshot tables with the sidecar present, deleted and corrupted, and
+    // a table without a log (no sidecar: footers alone)
+    Seq("present", "deleted", "corrupted", "no log").zipWithIndex.foreach {
+      case (mode, i) =>
+        DeleteParity.check(spark, mkdir(), mode, seed = 40 + i) { (dir, schema, filters) =>
+          DwrfDelete.deleteWhere(spark, dir, schema, filters).rowsDeleted
+        }
+    }
+  }
+
+  test("classification opens footers only for files the sidecar cannot refute") {
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThan}
+    val dir = mkdir()
+    DeleteParity.write(spark, dir)
+    val root = new Path(dir)
+    DwrfLog.enable(root, conf)
+    val snap = DwrfLog.latest(root, conf).get
+    val q = DwrfUtil.qualify(root, conf)
+    val schema = spark.read.format("dwrf").load(dir).schema
+    val sums = DwrfLogStats.load(root, conf, snap.statsVersion)
+    assert(sums.exists(_.size == 6))
+    // files(k) holds ids [100k, 100k + 100)
+    val (rels, files) = snap.files.zip(snap.resolved(q))
+      .sortBy { case (rel, _) => sums.get(rel)("id").longMin }.unzip
+
+    val recording = new org.apache.hadoop.conf.Configuration(conf)
+    recording.set("fs.file.impl", classOf[OpenRecorderFs].getName)
+    recording.setBoolean("fs.file.impl.disable.cache", true)
+    def classify(filters: Array[org.apache.spark.sql.sources.Filter],
+        sc: Option[DwrfLogStats.Summaries]) = {
+      OpenRecorderFs.opened.clear()
+      val c = DwrfDelete.classifyFiles(files, recording, schema, q, filters, sc)
+      val opened = OpenRecorderFs.opened.toArray.toSeq
+        .map(p => p.asInstanceOf[Path].getName).filter(_.endsWith(".dwrf"))
+      (c.map { case (f, tier, _) => f.getName -> tier }.toMap, opened)
+    }
+    // a point delete opens one footer
+    val point = Array[org.apache.spark.sql.sources.Filter](EqualTo("id", 250L))
+    val (tiers, opened) = classify(point, sums)
+    assert(opened === Seq(files(2).getName), s"opened $opened")
+    assert(tiers === files.map(_.getName).zipWithIndex
+      .map { case (n, k) => n -> (if (k == 2) 2 else 0) }.toMap)
+    // the survivors' footers still tell a whole-file drop from a row pass
+    val range = Array[org.apache.spark.sql.sources.Filter](
+      GreaterThanOrEqual("id", 100L), LessThan("id", 250L))
+    val (rt, ro) = classify(range, sums)
+    assert(ro.sorted === Seq(files(1), files(2)).map(_.getName).sorted)
+    assert(rt(files(1).getName) === 1 && rt(files(2).getName) === 2)
+    assert(rt.values.count(_ == 0) === 4)
+    // without a sidecar every footer opens, with the same verdicts
+    val (ft, fo) = classify(point, None)
+    assert(fo.sorted === files.map(_.getName).sorted && ft === tiers)
+    // a file the sidecar does not summarize goes through its footer
+    val (pt, po) = classify(point, sums.map(_ - rels.head))
+    assert(po.sorted === Seq(files.head, files(2)).map(_.getName).sorted)
+    assert(pt === tiers)
+  }
+}
+
+/** Seeded DELETE parity over both DELETE tiers: each random condition
+  * must leave exactly the rows a DataFrame filter keeps (`NOT
+  * coalesce(cond, false)`: a NULL condition keeps the row).
+  */
+object DeleteParity {
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.sources._
+  import org.apache.spark.sql.types.StructType
+
+  /** 6 files; file k holds ids [100k, 100k + 100), some keys NULL. */
+  def write(spark: SparkSession, dir: String): Unit =
+    spark.range(0, 600, 1, 6)
+      .select(col("id"),
+        when(col("id") % 7 === 0, lit(null))
+          .otherwise(concat(lit("k-"), format_string("%03d", col("id") % 50))).as("key"),
+        (col("id") * 0.5).as("v"), (col("id") % 5).cast("int").as("grp"))
+      .sortWithinPartitions("id")
+      .write.format("dwrf").mode("overwrite").save(dir)
+
+  /** A narrow random condition: conjunction filters + its SQL text. */
+  private def condition(r: scala.util.Random): (Array[Filter], String) = {
+    val k = r.nextInt(640).toLong
+    val w = 1 + r.nextInt(40)
+    val window: Array[Filter] = Array(GreaterThanOrEqual("id", k), LessThan("id", k + w))
+    val windowSql = s"id >= $k AND id < ${k + w}"
+    r.nextInt(6) match {
+      case 0 => (Array(EqualTo("id", k)), s"id = $k")
+      case 1 => (window, windowSql)
+      case 2 =>
+        val a = r.nextInt(5)
+        (window :+ In("grp", Array[Any](a, (a + 2) % 5)),
+          s"$windowSql AND grp IN ($a, ${(a + 2) % 5})")
+      case 3 => (window :+ IsNull("key"), s"$windowSql AND key IS NULL")
+      case 4 =>
+        val d = k * 0.5 + 7.25
+        (window :+ Or(LessThanOrEqual("v", d), EqualTo("key", "k-007")),
+          s"$windowSql AND (v <= $d OR key = 'k-007')")
+      case _ =>
+        val k2 = r.nextInt(640).toLong
+        (Array(Or(EqualTo("id", k), EqualTo("id", k2))), s"id = $k OR id = $k2")
+    }
+  }
+
+  /** Runs 6 seeded DELETEs through `delete` (returns rows deleted) on a
+    * fresh table in `dir`. `sidecar`: "present", "deleted" or
+    * "corrupted" (done to the current version's sidecar before each
+    * DELETE), or "no log" (a plain directory).
+    */
+  def check(spark: SparkSession, dir: String, sidecar: String, seed: Int)(
+      delete: (String, StructType, Array[Filter]) => Long): Unit = {
+    write(spark, dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    if (sidecar != "no log") DwrfLog.enable(root, conf)
+    val fs = root.getFileSystem(conf)
+    val schema = spark.read.format("dwrf").load(dir).schema
+    val r = new scala.util.Random(seed)
+    (1 to 6).foreach { _ =>
+      val (filters, sql) = condition(r)
+      DwrfLog.latest(root, conf).foreach { snap =>
+        val sc = new org.apache.hadoop.fs.Path(DwrfLog.logDir(root),
+          DwrfLogStats.sidecarName(snap.statsVersion))
+        sidecar match {
+          case "deleted" => fs.delete(sc, false)
+          case "corrupted" =>
+            val out = fs.create(sc, true)
+            out.write("graft-stats-v1\nnot\ta stats line".getBytes("UTF-8"))
+            out.close()
+          case _ => assert(fs.exists(sc), s"v${snap.version} names a missing sidecar")
+        }
+      }
+      val before = spark.read.format("dwrf").load(dir).collect()
+      val want = spark.read.format("dwrf").load(dir)
+        .where(s"NOT coalesce(($sql), false)").collect().map(_.toString).sorted.toSeq
+      val deleted = delete(dir, schema, filters)
+      val got = spark.read.format("dwrf").load(dir).collect().map(_.toString).sorted.toSeq
+      assert(got == want, s"[$sidecar] DELETE WHERE $sql")
+      assert(deleted == before.length - want.length, s"[$sidecar] rows deleted by $sql")
+    }
+  }
+}
+
+/** Local filesystem that records every file it opens. */
+class OpenRecorderFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    OpenRecorderFs.opened.add(f)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenRecorderFs {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 }

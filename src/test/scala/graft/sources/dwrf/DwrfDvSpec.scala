@@ -485,4 +485,12 @@ class DwrfDvSpec extends AnyFunSuite {
       assert(DwrfLog.latest(new Path(dir), conf).get.dvs.nonEmpty)
     } finally spark.sql("DROP TABLE IF EXISTS dv_sql_t")
   }
+
+  test("seeded merge-on-read DELETEs leave what a DataFrame filter predicts, any sidecar state") {
+    Seq("present", "deleted", "corrupted").zipWithIndex.foreach { case (mode, i) =>
+      DeleteParity.check(spark, tmpDir(), mode, seed = 70 + i) { (dir, schema, filters) =>
+        DwrfDv.deleteWhere(spark, dir, schema, filters).rowsDeleted
+      }
+    }
+  }
 }

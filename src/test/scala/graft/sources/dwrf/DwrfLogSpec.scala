@@ -405,4 +405,90 @@ class DwrfLogSpec extends AnyFunSuite {
     assert(DwrfLog.latestVersion(root, conf).get >= 1L)
     assert(ids(dir) === (0L until 12L))
   }
+
+  // ----------------------------------------- latest-version discovery
+
+  /** A configuration whose local file system records every directory
+    * it lists ([[ListingRecorderFs]]). */
+  private def recordingConf(): Configuration = {
+    val c = new Configuration(conf)
+    c.set("fs.file.impl", classOf[ListingRecorderFs].getName)
+    c.setBoolean("fs.file.impl.disable.cache", true)
+    c
+  }
+
+  private def logListings(root: Path): Int = {
+    val ld = Path.getPathWithoutSchemeAndAuthority(DwrfLog.logDir(root)).toString
+    ListingRecorderFs.listed.toArray.count(p => Path
+      .getPathWithoutSchemeAndAuthority(p.asInstanceOf[Path]).toString == ld)
+  }
+
+  test("latest finds versions another writer published after this JVM looked") {
+    val dir = tmpDir()
+    writeRange(dir, 0, 10)
+    val root = new Path(dir)
+    val v0 = DwrfLog.enable(root, conf)
+    assert(DwrfLog.latestVersion(root, conf) === Some(0L))
+    // another JVM's commits: manifests written straight through the
+    // FileSystem, bypassing everything this JVM remembers
+    val fs = root.getFileSystem(conf)
+    (1L to 3L).foreach { v =>
+      val out = fs.create(new Path(DwrfLog.logDir(root), f"v$v%020d.json"), false)
+      out.write(DwrfLog.render(v0.copy(version = v, op = s"foreign-$v"))
+        .getBytes("UTF-8"))
+      out.close()
+    }
+    assert(DwrfLog.latestVersion(root, conf) === Some(3L))
+    assert(DwrfLog.latest(root, conf).map(_.op) === Some("foreign-3"))
+    // and a commit from this JVM lands after them
+    writeRange(dir, 10, 12, mode = "append")
+    assert(DwrfLog.latestVersion(root, conf) === Some(4L))
+    assert(ids(dir) === (0L until 12L))
+  }
+
+  test("a dropped and recreated table resolves to its own v0, not the stale hint") {
+    val dir = tmpDir()
+    val root = new Path(dir)
+    writeRange(dir, 0, 10)
+    DwrfLog.enable(root, conf)
+    writeRange(dir, 10, 20, mode = "append")
+    writeRange(dir, 20, 30, mode = "append")
+    assert(DwrfLog.latestVersion(root, conf) === Some(2L))
+
+    val fs = root.getFileSystem(conf)
+    fs.delete(root, true)
+    writeRange(dir, 100, 105)
+    val rc = recordingConf()
+    ListingRecorderFs.listed.clear()
+    val v0 = DwrfLog.enable(root, rc)
+    assert(v0.version === 0L)
+    assert(DwrfLog.latestVersion(root, rc) === Some(0L))
+    assert(DwrfLog.latest(root, conf).map(_.op) === Some("init"))
+    assert(ids(dir) === (100L until 105L))
+    // the stale hint fell back to one listing (log absent at that point);
+    // the fresh v0 is found by probing again
+    assert(logListings(root) <= 1, s"listed ${ListingRecorderFs.listed}")
+  }
+
+  test("vacuum leaves latest unchanged, and a warm latest never lists the log") {
+    val dir = tmpDir()
+    val root = new Path(dir)
+    writeRange(dir, 0, 10)
+    DwrfLog.enable(root, conf)
+    (1 to 3).foreach(i => writeRange(dir, 10 * i, 10 * i + 10, mode = "append"))
+    val before = DwrfLog.latest(root, conf)
+    assert(before.map(_.version) === Some(3L))
+    DwrfLog.vacuum(root, conf, retainLast = 1)
+    assert(DwrfLog.latest(root, conf) === before)
+
+    val rc = recordingConf()
+    ListingRecorderFs.listed.clear()
+    assert(DwrfLog.latest(root, rc) === before)
+    assert(DwrfLog.resolve(root, rc, None) === before)
+    writeRange(dir, 40, 50, mode = "append") // commits v4 (session conf)
+    assert(DwrfLog.latestVersion(root, rc) === Some(4L))
+    assert(logListings(root) === 0,
+      s"a warm latest must not list ${DwrfLog.logDir(root)}")
+    assert(ids(dir) === (0L until 50L))
+  }
 }

@@ -174,4 +174,144 @@ class DwrfLogStatsSpec extends AnyFunSuite {
       assert(got === want, s"condition: $c")
     }
   }
+
+  // ------------------------------------------------- shared sidecars
+
+  private def sidecarExists(root: Path, v: Long): Boolean =
+    root.getFileSystem(conf).exists(
+      new Path(DwrfLog.logDir(root), DwrfLogStats.sidecarName(v)))
+
+  private def manifestBody(root: Path, v: Long): String = {
+    val fs = root.getFileSystem(conf)
+    val in = fs.open(new Path(DwrfLog.logDir(root), f"v$v%020d.json"))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def manifestPruned(dir: String, cond: String): (Seq[Long], Long) = {
+    val mp0 = DwrfPlanningProbe.manifestPruned.get()
+    val got = idsWhere(dir, cond)
+    (got, DwrfPlanningProbe.manifestPruned.get() - mp0)
+  }
+
+  test("a merge-on-read DELETE shares its parent's sidecar and scans still prune") {
+    import org.apache.spark.sql.sources.EqualTo
+    val dir = tmpDir()
+    writeRanged(dir)
+    val root = new Path(dir)
+    DwrfLog.enable(root, conf)
+    val schema = spark.read.format("dwrf").load(dir).schema
+
+    // two DV-only commits: the file set never changes, so both name v0's
+    // sidecar and neither writes one
+    DwrfDv.deleteWhere(spark, dir, schema, Array(EqualTo("id", 150L)))
+    DwrfDv.deleteWhere(spark, dir, schema, Array(EqualTo("id", 160L)))
+    val v2 = DwrfLog.latest(root, conf).get
+    assert(v2.version === 2L && v2.dvs.size === 1)
+    assert(v2.stats === Some(0L) && v2.statsVersion === 0L)
+    assert(manifestBody(root, 1L).contains("\"stats\":0,"))
+    assert(!sidecarExists(root, 1L) && !sidecarExists(root, 2L))
+    val want = (150L to 249L).filterNot(Set(150L, 160L))
+    val (got, pruned) = manifestPruned(dir, "id BETWEEN 150 AND 249")
+    assert(got === want)
+    assert(pruned === 6, s"the shared sidecar must still prune, pruned $pruned")
+
+    // vacuum keeps the sidecar a retained manifest names, though the
+    // version that wrote it is dropped
+    DwrfLog.vacuum(root, conf, retainLast = 1)
+    val fs = root.getFileSystem(conf)
+    assert(!fs.exists(new Path(DwrfLog.logDir(root), f"v${0}%020d.json")))
+    assert(sidecarExists(root, 0L), "a shared sidecar must survive vacuum")
+    val (got2, pruned2) = manifestPruned(dir, "id BETWEEN 150 AND 249")
+    assert(got2 === want && pruned2 === 6)
+    // the next file-set change writes its own sidecar from the shared one
+    DwrfDelete.deleteWhere(spark, dir, schema,
+      Array(org.apache.spark.sql.sources.LessThan("id", 100L)))
+    val v3 = DwrfLog.latest(root, conf).get
+    assert(v3.stats === None && sidecarExists(root, 3L))
+    assert(DwrfLogStats.load(root, conf, 3L).get.keySet === v3.files.toSet)
+  }
+
+  test("restore to a delete-vector-only version reads the sidecar it shares") {
+    import org.apache.spark.sql.sources.{EqualTo, LessThan}
+    val dir = tmpDir()
+    writeRanged(dir)
+    val root = new Path(dir)
+    DwrfLog.enable(root, conf)
+    val schema = spark.read.format("dwrf").load(dir).schema
+    DwrfDv.deleteWhere(spark, dir, schema, Array(EqualTo("id", 420L))) // v1
+    DwrfDelete.deleteWhere(spark, dir, schema, Array(LessThan("id", 100L))) // v2
+    assert(DwrfLog.read(root, conf, 1L).statsVersion === 0L)
+    assert(DwrfLog.read(root, conf, 2L).stats === None)
+
+    val v3 = DwrfLog.restore(root, conf, 1L)
+    assert(v3.files === DwrfLog.read(root, conf, 1L).files)
+    // the restored file set differs from its parent's: own sidecar, built
+    // from the one v1 shares
+    assert(v3.stats === None && sidecarExists(root, 3L))
+    assert(norm(DwrfLogStats.load(root, conf, 3L).get) ===
+      norm(DwrfLogStats.load(root, conf, 0L).get))
+    val (got, pruned) = manifestPruned(dir, "id BETWEEN 400 AND 499")
+    assert(got === (400L to 499L).filterNot(_ == 420L))
+    assert(pruned === 7)
+    assert(idsWhere(dir, "id < 100") === (0L until 100L))
+  }
+
+  test("a manifest without a stats field loads its own version's sidecar") {
+    val dir = tmpDir()
+    writeRanged(dir)
+    val root = new Path(dir)
+    val v0 = DwrfLog.enable(root, conf)
+    assert(!manifestBody(root, 0L).contains("\"stats\""))
+    // an older writer's v1 drops the first file; its manifest has no
+    // stats field and it wrote its own sidecar
+    val files = v0.files.drop(1)
+    val fs = root.getFileSystem(conf)
+    val out = fs.create(new Path(DwrfLog.logDir(root), f"v${1}%020d.json"), false)
+    out.write(("{\"version\":1,\"ts\":" + (v0.ts + 1) + ",\"op\":\"delete\"," +
+      files.map("\"" + _ + "\"").mkString("\"files\":[", ",", "]}")).getBytes("UTF-8"))
+    out.close()
+    DwrfLogStats.write(root, conf, 1L, DwrfLogStats.summarize(root, conf, files))
+    fs.delete(new Path(DwrfLog.logDir(root), DwrfLogStats.sidecarName(0L)), false)
+
+    val v1 = DwrfLog.latest(root, conf).get
+    assert(v1.version === 1L && v1.stats === None && v1.statsVersion === 1L)
+    val (got, pruned) = manifestPruned(dir, "id BETWEEN 150 AND 249")
+    assert(got === (150L to 249L))
+    assert(pruned === 5, s"v1's own sidecar must prune, pruned $pruned")
+  }
+
+  test("commits that change the file set write their own sidecar") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir()
+    val root = new Path(dir)
+    s.sql("DROP TABLE IF EXISTS dwrf_lstats_dml")
+    s.sql(s"CREATE TABLE dwrf_lstats_dml (id BIGINT, bal DOUBLE) USING dwrf LOCATION '$dir'")
+    s.sql("INSERT INTO dwrf_lstats_dml VALUES (1, 10.0), (2, 20.0), (3, 30.0)")
+    DwrfLog.enable(root, conf)
+    def ownSidecar(op: String): Unit = {
+      val snap = DwrfLog.latest(root, conf).get
+      assert(snap.op === op)
+      assert(snap.stats === None && sidecarExists(root, snap.version),
+        s"$op must write v${snap.version}'s own sidecar")
+      assert(DwrfLogStats.load(root, conf, snap.version).get.keySet ===
+        snap.files.toSet)
+    }
+    s.sql("INSERT INTO dwrf_lstats_dml VALUES (4, 40.0)")
+    ownSidecar("append")
+    s.sql("DELETE FROM dwrf_lstats_dml WHERE id = 4")
+    ownSidecar("delete")
+    s.sql("UPDATE dwrf_lstats_dml SET bal = bal * 2 WHERE id >= 2")
+    ownSidecar("update")
+    Seq((2L, 5.0), (9L, 9.0)).toDF("id", "amt").createOrReplaceTempView("lstats_chg")
+    s.sql("""MERGE INTO dwrf_lstats_dml t USING lstats_chg c ON t.id = c.id
+            |WHEN MATCHED THEN UPDATE SET bal = t.bal + c.amt
+            |WHEN NOT MATCHED THEN INSERT (id, bal) VALUES (c.id, c.amt)
+            |""".stripMargin)
+    ownSidecar("merge")
+    assert(s.sql("SELECT id, bal FROM dwrf_lstats_dml").as[(Long, Double)]
+      .collect().sortBy(_._1).toSeq ===
+      Seq((1L, 10.0), (2L, 45.0), (3L, 60.0), (9L, 9.0)))
+    s.sql("DROP TABLE dwrf_lstats_dml")
+  }
 }

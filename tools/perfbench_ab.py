@@ -13,9 +13,18 @@ uses the same seed, length (default: ``run_seconds`` from the base
 checkout's BENCHMARK.json) and ``--trace 0``.
 
 For each end-to-end metric BENCHMARK.json declares, prints both medians,
-the change ratio head/base, the base's interquartile range, and in how
-many seed pairs head was better (ties count for neither side). The last
-line is one JSON object holding every run's values, for the record.
+the change ratio head/base, the base's interquartile range, in how many
+seed pairs head was better (ties count for neither side), and a verdict:
+
+    regress     the head median is worse than the base median by more than
+                the metric's relative ``bound``
+    gain        head better in at least 9 of 10 pairs, and the medians
+                differ by more than the base IQR
+    unresolved  the base IQR exceeds the bound (relative to the base
+                median) and not every head run beats every base run
+    same        none of the above
+
+The last line is one JSON object holding every run's values, for the record.
 
 Only invokes the benchmark: each checkout's run.py writes its own
 ``.bench_build/`` and ``.bench_out/``; this script writes nothing.
@@ -49,6 +58,24 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(base, head, lower, bound):
+    """The verdict for one metric's paired runs (see the module docstring)."""
+    mb, mh = statistics.median(base), statistics.median(head)
+    q1, q3 = quartiles(base)
+    iqr = q3 - q1
+    better = (lambda x, y: y < x) if lower else (lambda x, y: y > x)
+    worse_by = (mh - mb if lower else mb - mh) / abs(mb) if mb else 0.0
+    if worse_by > bound:
+        return "regress"
+    wins = sum(1 for x, y in zip(base, head) if better(x, y))
+    if 10 * wins >= 9 * len(base) and better(mb, mh) and abs(mh - mb) > iqr:
+        return "gain"
+    separated = better(min(base), max(head)) if lower else better(max(base), min(head))
+    if mb and iqr / abs(mb) > bound and not separated:
+        return "unresolved"
+    return "same"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True, help="checkout measured as the baseline")
@@ -77,8 +104,8 @@ def main():
         sys.exit("no seed produced a result on both sides")
 
     print("\n%s: %d seed pairs, %gs runs" % (a.workload, len(pairs), seconds))
-    print("%-34s %12s %12s %8s %12s %7s" % (
-        "metric", "base p50", "head p50", "ratio", "base IQR", "wins"))
+    print("%-34s %12s %12s %8s %12s %7s  %s" % (
+        "metric", "base p50", "head p50", "ratio", "base IQR", "wins", "verdict"))
     for m in spec["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         base = [b["metrics"][name]["value"] for _, b, _ in pairs]
@@ -86,9 +113,9 @@ def main():
         mb, mh = statistics.median(base), statistics.median(head)
         q1, q3 = quartiles(base)
         wins = sum(1 for x, y in zip(base, head) if (y < x if lower else y > x))
-        print("%-34s %12.4g %12.4g %8.3f %12.4g %4d/%d" % (
+        print("%-34s %12.4g %12.4g %8.3f %12.4g %4d/%d  %s" % (
             "%s [%s]" % (name, m["unit"]), mb, mh, mh / mb if mb else float("nan"),
-            q3 - q1, wins, len(pairs)))
+            q3 - q1, wins, len(pairs), verdict(base, head, lower, m["bound"])))
     print(json.dumps({"workload": a.workload, "seconds": seconds, "runs": [
         {"seed": s, "base": b, "head": h} for s, b, h in pairs]}))
 
